@@ -4,6 +4,16 @@ Local testing runs ``local[N]`` in one JVM, but every default here is
 chosen to survive a multi-executor cluster: AQE for runtime re-plans
 (skew joins, partition coalescing), UTC session timezone so results
 are oracle-comparable, Arrow for the pandas exchange paths.
+
+Shuffle width has two owners. Batch plans start at
+``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` (the
+``shuffle_partitions`` argument, else ``SPARK_GRAFT_SHUFFLE_PARTITIONS``,
+else 32) and AQE coalesces from there. Structured Streaming turns AQE
+off inside micro-batches, so stateful operators and ``foreachBatch``
+shuffles run at ``spark.sql.shuffle.partitions``, which a fresh session
+sets to its task slots (``defaultParallelism``). A stateful query
+freezes that width into its checkpoint at its first start; a restart
+keeps the checkpointed width whatever the session says.
 """
 
 from __future__ import annotations
@@ -12,10 +22,13 @@ import importlib.util
 import os
 import warnings
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_INITIAL_WIDTH = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 # One BLAS thread per process (the primary pin lives in the package
 # __init__, BEFORE pyspark→numpy load OpenBLAS — an after-load env is
@@ -51,13 +64,16 @@ def get_spark(
 
     On a real cluster, callers pass ``master=None`` and submit via
     spark-submit; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
+    ``shuffle_partitions`` is the batch shuffle width (see the module
+    docstring); the stream width is the task slots.
     """
-    builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        master = f"local[{DEFAULT_CPUS}]"
-    builder = builder.master(master)
     conf = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.app.name": app_name,
+        "spark.master": master or f"local[{DEFAULT_CPUS}]",
+        # batch width: with AQE coalescing on, SQLConf.numShufflePartitions
+        # reads this, not spark.sql.shuffle.partitions (the stream width,
+        # set to the task slots below)
+        _INITIAL_WIDTH: str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -106,7 +122,7 @@ def get_spark(
         # honor the runtime-settable confs the caller asked for; warn
         # about anything only a fresh session could apply.
         if shuffle_partitions is not None:
-            active.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+            active.conf.set(_INITIAL_WIDTH, str(shuffle_partitions))
         for k, v in (extra_conf or {}).items():
             try:
                 active.conf.set(k, v)
@@ -117,8 +133,11 @@ def get_spark(
                     stacklevel=2,
                 )
         return active
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # The task slots are known once the SparkContext is up; passing the
+    # stream width as a session option (not conf.set afterwards) leaves
+    # the session state to build lazily at the first query.
+    sc = SparkContext.getOrCreate(SparkConf().setAll(list(conf.items())))
+    conf.setdefault("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -18,6 +18,7 @@ from anti_money_laundering_spark.plans.catalog import get_catalog
 from tests.oracle_utils import _canon
 
 CATALOG = get_catalog()
+INITIAL_WIDTH = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 #: One query per determinism-risk class: window tiebreaks, md5-ordered
 #: top-k-per-group, md5 sampling, global rank, array-frame windows,
@@ -42,9 +43,13 @@ def test_result_invariant_to_shuffle_width_and_scan_layout(spark, sf_dir, name):
     fn = CATALOG[name].fn
     base = _canon(fn(spark, sf_dir).toPandas())
     orig_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    orig_initial = spark.conf.get(INITIAL_WIDTH)
     orig_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
+        # AQE's initial width is the batch width; shuffle.partitions is
+        # the width of any plan that runs with AQE off
         spark.conf.set("spark.sql.shuffle.partitions", "7")
+        spark.conf.set(INITIAL_WIDTH, "7")
         narrow = _canon(fn(spark, sf_dir).toPandas())
         # second leg: change the INPUT split layout too (64 KB splits →
         # many more, differently-bounded scan partitions)
@@ -52,6 +57,7 @@ def test_result_invariant_to_shuffle_width_and_scan_layout(spark, sf_dir, name):
         resplit = _canon(fn(spark, sf_dir).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig_shuffle)
+        spark.conf.set(INITIAL_WIDTH, orig_initial)
         spark.conf.set("spark.sql.files.maxPartitionBytes", orig_split)
     assert base == narrow, f"{name}: result depends on shuffle width"
     assert base == resplit, f"{name}: result depends on input split layout"

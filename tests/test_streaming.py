@@ -864,3 +864,78 @@ def test_stream_coordinated_sliding_hand_case(spark):
         (95000, "2024-03-01 00:00"): 3,
         (95000, "2024-02-29 12:00"): 3,
     }
+
+
+def _totals_into_versioned(spark, replay, table, ckpt):
+    """Drain ``stateful_user_totals`` over ``replay`` into ``table``'s
+    upsert sink (the always-on deployment shape) and return the query."""
+    q = (
+        stateful_user_totals(read_events_stream(spark, replay))
+        .writeStream.foreachBatch(table.stream_sink(on=["user_id"]))
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def _state_widths(q):
+    return [so["numShufflePartitions"] for p in q.recentProgress for so in p["stateOperators"]]
+
+
+def test_stateful_stream_runs_at_task_slots(spark, replay_dir):
+    """Micro-batches run with AQE off, so the stream width is the
+    session's ``spark.sql.shuffle.partitions``: the task slots, not the
+    batch width. Every state operator runs ``defaultParallelism``
+    partitions, each upsert commit adds at most that many files, and
+    batch plans keep the fixture's ``shuffle_partitions=8``."""
+    from anti_money_laundering_spark.sources.versioned import VersionedTable
+
+    slots = spark.sparkContext.defaultParallelism
+    t = VersionedTable(os.path.join(tempfile.mkdtemp(prefix="vt_slots_"), "t"))
+    q = _totals_into_versioned(spark, replay_dir, t, tempfile.mkdtemp(prefix="slots_ckpt_"))
+    widths = _state_widths(q)
+    assert widths and set(widths) == {slots}
+    files = [set(t._load(v).files) for v in t.versions()]
+    added = [len(cur - prev) for prev, cur in zip([set()] + files, files)]
+    assert added and max(added) <= slots
+    assert spark._jsparkSession.sessionState().conf().numShufflePartitions() == 8
+
+
+def test_stateful_restart_keeps_checkpointed_width(spark, sf_dir):
+    """A checkpoint first started 32 wide (the old default) restarts at
+    32 state partitions under the task-slot default: Spark restores the
+    width from the offset log, so deployed checkpoints keep their state
+    layout, and the upserted head still equals the batch face."""
+    from anti_money_laundering_spark.sources.versioned import VersionedTable
+    from anti_money_laundering_spark.streaming import write_events_replay
+
+    events = load_table(spark, sf_dir, "events")
+    us = F.expr("unix_micros(ts)")
+    stamps = sorted(r[0] for r in events.select(us).collect())
+    cut = stamps[len(stamps) * 2 // 3]
+    replay = write_events_replay(events.filter(us < cut), n_files=2)
+    t = VersionedTable(os.path.join(tempfile.mkdtemp(prefix="vt_restart_"), "t"))
+    ckpt = tempfile.mkdtemp(prefix="restart_ckpt_")
+
+    stream_width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        first = _totals_into_versioned(spark, replay, t, ckpt)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", stream_width)
+    assert set(_state_widths(first)) == {32}
+
+    write_events_replay(events.filter(us >= cut), n_files=1, path=replay)
+    again = _totals_into_versioned(spark, replay, t, ckpt)
+    assert sum(p["numInputRows"] for p in again.recentProgress) > 0
+    widths = _state_widths(again)
+    assert widths and set(widths) == {32}
+
+    cols = ["user_id", "total_value", "n_events", "alert"]
+    rounded = F.round("total_value", 2).alias("total_value")
+    head = t.read(spark).select("user_id", rounded, "n_events", "alert")
+    face = stateful_user_totals(events).select("user_id", rounded, "n_events", "alert")
+    assert _rows(head, cols) == _rows(face, cols)
