@@ -10,10 +10,13 @@ Shuffle width has two owners. Batch plans start at
 ``shuffle_partitions`` argument, else ``SPARK_GRAFT_SHUFFLE_PARTITIONS``,
 else 32) and AQE coalesces from there. Structured Streaming turns AQE
 off inside micro-batches, so stateful operators and ``foreachBatch``
-shuffles run at ``spark.sql.shuffle.partitions``, which a fresh session
-sets to its task slots (``defaultParallelism``). A stateful query
-freezes that width into its checkpoint at its first start; a restart
-keeps the checkpointed width whatever the session says.
+shuffles run at ``spark.sql.shuffle.partitions``. A fresh session keeps
+a value set for it in ``extra_conf``, spark-submit ``--conf`` or
+spark-defaults; otherwise it sets the task slots (``defaultParallelism``)
+capped at the batch width, so a stream is never wider than a batch plan
+starts. A stateful query freezes that width into its checkpoint at its
+first start; a restart keeps the checkpointed width whatever the
+session says.
 """
 
 from __future__ import annotations
@@ -65,14 +68,14 @@ def get_spark(
     On a real cluster, callers pass ``master=None`` and submit via
     spark-submit; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
     ``shuffle_partitions`` is the batch shuffle width (see the module
-    docstring); the stream width is the task slots.
+    docstring); the stream width is the task slots, at most that.
     """
     conf = {
         "spark.app.name": app_name,
         "spark.master": master or f"local[{DEFAULT_CPUS}]",
         # batch width: with AQE coalescing on, SQLConf.numShufflePartitions
         # reads this, not spark.sql.shuffle.partitions (the stream width,
-        # set to the task slots below)
+        # set below)
         _INITIAL_WIDTH: str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -135,9 +138,14 @@ def get_spark(
         return active
     # The task slots are known once the SparkContext is up; passing the
     # stream width as a session option (not conf.set afterwards) leaves
-    # the session state to build lazily at the first query.
+    # the session state to build lazily at the first query. A width the
+    # cluster conf pins (spark-submit --conf, spark-defaults) wins.
     sc = SparkContext.getOrCreate(SparkConf().setAll(list(conf.items())))
-    conf.setdefault("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    width = min(sc.defaultParallelism, int(conf[_INITIAL_WIDTH]))
+    conf.setdefault(
+        "spark.sql.shuffle.partitions",
+        sc.getConf().get("spark.sql.shuffle.partitions", str(width)),
+    )
     spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -887,21 +887,66 @@ def _state_widths(q):
 
 def test_stateful_stream_runs_at_task_slots(spark, replay_dir):
     """Micro-batches run with AQE off, so the stream width is the
-    session's ``spark.sql.shuffle.partitions``: the task slots, not the
-    batch width. Every state operator runs ``defaultParallelism``
-    partitions, each upsert commit adds at most that many files, and
-    batch plans keep the fixture's ``shuffle_partitions=8``."""
+    session's ``spark.sql.shuffle.partitions``: the task slots capped at
+    the batch width. Every state operator runs that many partitions,
+    each upsert commit adds at most that many files, and batch plans
+    keep the fixture's ``shuffle_partitions=8``."""
     from anti_money_laundering_spark.sources.versioned import VersionedTable
 
-    slots = spark.sparkContext.defaultParallelism
+    width = min(spark.sparkContext.defaultParallelism, 8)
     t = VersionedTable(os.path.join(tempfile.mkdtemp(prefix="vt_slots_"), "t"))
     q = _totals_into_versioned(spark, replay_dir, t, tempfile.mkdtemp(prefix="slots_ckpt_"))
     widths = _state_widths(q)
-    assert widths and set(widths) == {slots}
+    assert widths and set(widths) == {width}
     files = [set(t._load(v).files) for v in t.versions()]
     added = [len(cur - prev) for prev, cur in zip([set()] + files, files)]
-    assert added and max(added) <= slots
+    assert added and max(added) <= width
     assert spark._jsparkSession.sessionState().conf().numShufflePartitions() == 8
+
+
+_FRESH_SESSION_WIDTHS = """
+from anti_money_laundering_spark.session import get_spark
+
+def widths(**kw):
+    spark = get_spark(extra_conf={"spark.driver.memory": "1g"}, **kw)
+    conf = spark._jsparkSession.sessionState().conf()
+    got = (conf.numShufflePartitions(), int(spark.conf.get("spark.sql.shuffle.partitions")))
+    spark.stop()
+    return got
+
+print(widths(master="local[64]"))
+print(widths(master="local[2]", shuffle_partitions=8))
+# spark-submit --conf and spark-defaults reach the driver as JVM system properties
+spark = get_spark(master="local[2]")
+spark._jvm.System.setProperty("spark.sql.shuffle.partitions", "5")
+spark.stop()
+print(widths(master="local[64]"))
+"""
+
+
+def test_fresh_session_stream_width():
+    """A fresh ``get_spark`` session sets the stream width to the task
+    slots capped at the batch width: 64 slots stay at the default 32
+    (never wider than a batch plan starts), 2 slots narrow to 2. A width
+    the cluster conf pins wins over the default. Runs in its own process
+    because the test session is already up."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    env["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "32"
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION_WIDTHS],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+        check=True,
+    ).stdout.split("\n")
+    # (batch width, stream width) per session
+    assert [line for line in out if line.startswith("(")] == ["(32, 32)", "(8, 2)", "(32, 5)"]
 
 
 def test_stateful_restart_keeps_checkpointed_width(spark, sf_dir):
